@@ -111,6 +111,34 @@ object Bench {
           ref.get(n).exists(r => r > 0 && w > factor * r) =>
         (n, w, ref(n), w / ref(n))
     }.sortBy(-_._4)
+
+  /** `d` with `digits` decimals and a '.' separator whatever the JVM's
+    * default locale: the bench line is JSON, and a comma-decimal locale
+    * would make it unparseable.
+    */
+  private[graft] def num(d: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(d))
+
+  /** Per-query times as a JSON object. 6-decimal (µs) rendering halves the
+    * two 232-entry maps' bytes vs full double digits — log capture has
+    * tail-truncated the stdout line before; a smaller line truncates less,
+    * and µs resolution is far below the board's run-to-run noise. -1
+    * failure markers render exactly.
+    */
+  private[graft] def timesJson(results: Seq[(String, Double, Double)],
+      sel: ((String, Double, Double)) => Double): String =
+    results.map(r => "\"" + r._1 + "\":" + num(sel(r), 6)).mkString("{", ",", "}")
+
+  /** One tier's summary: query count, cold and warm totals, warm per query. */
+  private[graft] def tierJson(name: String, rs: Seq[(String, Double, Double)]): String = {
+    val cold = rs.map(_._2).filter(_ >= 0).sum
+    val warm = rs.map(_._3).filter(_ >= 0).sum
+    val n = rs.count(_._2 >= 0)
+    val per = if (n == 0) 0.0 else warm / n
+    s""""$name":{"n":$n,"cold":${num(cold, 3)},"warm":${num(warm, 3)},""" +
+      s""""warm_per_query":${num(per, 4)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -151,25 +179,9 @@ object Bench {
         catch { case e: Throwable => System.err.println(s"[bench] $name warm failed: $e"); -1.0 }
       (name, cold, warm)
     }
-    // 6-decimal (µs) rendering halves the two 232-entry maps' bytes vs
-    // full double digits — the stdout line has been tail-truncated by log
-    // capture twice (rounds 5 and 14); a smaller line truncates less, and
-    // µs resolution is far below the board's run-to-run noise. -1
-    // failure markers render exactly.
-    def timesJson(sel: ((String, Double, Double)) => Double): String =
-      results.map(r => s"\"" + r._1 + "\":" + f"${sel(r)}%.6f")
-        .mkString("{", ",", "}")
     val failed = results.collect { case (k, c, w) if c < 0 || w < 0 => "\"" + k + "\"" }
     val coldTotal = results.map(_._2).filter(_ >= 0).sum
     val warmTotal = results.map(_._3).filter(_ >= 0).sum
-    def tierJson(name: String, rs: Seq[(String, Double, Double)]): String = {
-      val cold = rs.map(_._2).filter(_ >= 0).sum
-      val warm = rs.map(_._3).filter(_ >= 0).sum
-      val n = rs.count(_._2 >= 0)
-      val per = if (n == 0) 0.0 else warm / n
-      s""""$name":{"n":$n,"cold":${f"$cold%.3f"},"warm":${f"$warm%.3f"},""" +
-        s""""warm_per_query":${f"$per%.4f"}}"""
-    }
     val (life, parity) = results.partition(r => isLifecycle(r._1))
     // drift gate (see driftOutliers): warm medians vs the committed
     // same-SF recording at bench_ref.json — BOTH tiers. Lifecycle queries
@@ -208,8 +220,8 @@ object Bench {
         if (rerun < 0) "error"
         else if (rerun <= fac * r) "contention"
         else "regression"
-      s"""{"q":"$n","tier":"$tier","warm":${f"$w%.3f"},"ref":${f"$r%.3f"},""" +
-        s""""ratio":${f"$ratio%.2f"},"rerun":${f"$rerun%.3f"},""" +
+      s"""{"q":"$n","tier":"$tier","warm":${num(w, 3)},"ref":${num(r, 3)},""" +
+        s""""ratio":${num(ratio, 2)},"rerun":${num(rerun, 3)},""" +
         s""""verdict":"$verdict"}""" }.mkString("[", ",", "]")
     // Field order is truncation-armor (r14's round-over-round comparison
     // was lost to a capture that cut the line's tail): EVERY compact
@@ -227,8 +239,8 @@ object Bench {
         s""""drift_factor_lifecycle":$lifeFactor,""" +
         s""""drift_ref_queries":${refWarm.size},""" +
         s""""failures":[${failed.mkString(",")}],"sf":"$sfDir",""" +
-        s""""queries":${timesJson(_._2)},""" +
-        s""""queries_warm":${timesJson(_._3)}}"""
+        s""""queries":${timesJson(results, _._2)},""" +
+        s""""queries_warm":${timesJson(results, _._3)}}"""
     // File first, stdout second: if log capture truncates the line, the
     // artifact already exists on disk.
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json + "\n")

@@ -49,9 +49,9 @@ object Scratch {
         new org.apache.spark.scheduler.SparkListener {
           override def onJobStart(
               j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobLog.add(Option(
-              j.properties.getProperty("spark.job.description"))
-              .orElse(Option(j.properties.getProperty("callSite.short")))
+            jobLog.add(Option(j.properties).flatMap(p =>
+              Option(p.getProperty("spark.job.description"))
+                .orElse(Option(p.getProperty("callSite.short"))))
               .getOrElse("?"))
         })
     // optional stage-level work attribution (SCRATCH_STAGE_DEBUG=1):

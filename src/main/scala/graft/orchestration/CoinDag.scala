@@ -7,6 +7,7 @@ import graft.sinks.{LakeSink, Merge}
 import graft.sources.{CoinSources, HttpCoinMarketsFetcher}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Orchestration twin of the reference's flagship DAG (SURVEY §3 EP1,
   * `dags/coin_data_pipeline_optimized.py:1243`): the same 14-task linear
@@ -85,13 +86,11 @@ object CoinDag {
   def runStage(spark: SparkSession, stage: String, conf: StageConf): Unit = stage match {
     case "create_tables" =>
       // Parquet serving layout needs no DDL; materialize the warehouse roots
-      // so downstream merges have a stable parent, and surface the star-DDL
-      // (S9) for operators running against a real warehouse.
+      // so downstream merges have a stable parent. The star-DDL (S9) for a
+      // real warehouse is CoinSchemas.WarehouseDdl.
       val fs = new org.apache.hadoop.fs.Path(conf.serveRoot)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.mkdirs(new org.apache.hadoop.fs.Path(conf.serveRoot))
-      CoinSchemas.WarehouseDdl.all.foreach(ddl => spark.sparkContext.setJobDescription(
-        s"create_tables: ${ddl.linesIterator.next()}"))
 
     case "extract" =>
       // HTTP pull (S1) → LOCAL raw staging file, the reference's extract
@@ -132,12 +131,12 @@ object CoinDag {
     case "load_dim" =>
       val silver = CoinSources.readSilver(spark, conf.silverDir)
       mergeIntoParquet(spark, CoinOps.dimensionRows(silver), conf.dimTable,
-        keys = Seq("coin_id"), update = false)
+        CoinSchemas.dimension, keys = Seq("coin_id"), update = false)
 
     case "load_fact" =>
       val silver = CoinSources.readSilver(spark, conf.silverDir)
       mergeIntoParquet(spark, CoinOps.factRows(silver), conf.factTable,
-        keys = Seq("coin_id", "timestamp"), update = false)
+        CoinSchemas.fact, keys = Seq("coin_id", "timestamp"), update = false)
 
     case "build_gold_minio" =>
       val silver = CoinSources.readSilver(spark, conf.silverDir)
@@ -153,7 +152,8 @@ object CoinDag {
 
     case "validate_gold_row_count" =>
       val lakeGold = CoinSources.readGold(spark, conf.goldDir)
-      val served = spark.read.parquet(s"${conf.serveRoot}/gold_coin_daily_metrics")
+      val served = spark.read.schema(CoinSchemas.goldDaily)
+        .parquet(s"${conf.serveRoot}/gold_coin_daily_metrics")
         .filter(col("dt") === conf.ds)
       CoinOps.assertCountsReconcile(lakeGold, served, conf.ds)
 
@@ -177,15 +177,16 @@ object CoinDag {
   /** Key-based insert-ignore (update=false) merge into a parquet warehouse
     * table, published atomically — the parquet twin of the reference's
     * `ON CONFLICT DO NOTHING` dim/fact loads (S6/S7), so stage re-runs
-    * converge instead of appending duplicates.
+    * converge instead of appending duplicates. The table is read with its
+    * declared `schema`: this stage wrote it, so inference would only cost a job.
     */
   private def mergeIntoParquet(spark: SparkSession, incoming: DataFrame,
-      path: String, keys: Seq[String], update: Boolean): Unit = {
+      path: String, schema: StructType, keys: Seq[String], update: Boolean): Unit = {
     val p  = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val merged =
       if (fs.exists(p)) {
-        val existing = spark.read.parquet(path)
+        val existing = spark.read.schema(schema).parquet(path)
         if (update) Merge.upsert(existing, incoming, keys)
         else Merge.insertIgnore(existing, incoming, keys)
       } else incoming

@@ -2,7 +2,7 @@ package graft.orchestration
 
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, PassageDedup, TextAnalysis}
-import graft.sinks.CorpusJsonl
+import graft.sinks.{CorpusJsonl, LakeSink}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -143,10 +143,11 @@ object CorpusDag {
         conf.corpusDir, conf.jsonlShards)
 
     case "funnel_report" =>
-      // counts from the DURABLE stage outputs — the report is derivable
-      // from the lake alone, so it is exactly as retryable as any stage
+      // counts from the DURABLE stage outputs' parquet footers — the report
+      // is derivable from the lake alone, so it is exactly as retryable as
+      // any stage, and it costs no Spark job
       import spark.implicits._
-      def n(dir: String): Long = spark.read.parquet(dir).count()
+      def n(dir: String): Long = LakeSink.parquetRowCount(spark, dir)
       Seq((conf.ds, n(conf.inputDir), n(conf.filteredDir), n(conf.exactDir),
           n(conf.acceptedDir)))
         .toDF("ds", "input", "after_filter", "after_exact", "after_neardup")

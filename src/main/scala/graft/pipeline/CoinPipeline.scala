@@ -105,7 +105,7 @@ object CoinPipeline {
     val fs = finalP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val merged =
       if (fs.exists(finalP)) {
-        val existing = spark.read.parquet(path).alias("e")
+        val existing = spark.read.schema(CoinSchemas.goldDaily).parquet(path).alias("e")
         val incomingKeys = broadcast(
           incoming.select(col("dt"), col("coin_id")).dropDuplicates("dt", "coin_id")).alias("i")
         // null-safe key equality: a null key must still anti-match its twin
@@ -117,6 +117,6 @@ object CoinPipeline {
       merged.write.mode("overwrite").parquet(staging.toString)
     }
     spark.catalog.refreshByPath(path) // rename-swap bypasses Spark's cache invalidation
-    spark.read.parquet(path)
+    spark.read.schema(CoinSchemas.goldDaily).parquet(path)
   }
 }

@@ -77,6 +77,24 @@ object CoinSchemas {
     StructField("dt", StringType)
   ))
 
+  /** Serving dimension table, the shape of `CoinOps.dimensionRows`. */
+  val dimension: StructType = StructType(Seq(
+    StructField("coin_id", StringType),
+    StructField("name", StringType),
+    StructField("symbol", StringType),
+    StructField("category", StringType)
+  ))
+
+  /** Serving fact table keyed `(coin_id, timestamp)`, the shape of
+    * `CoinOps.factRows`.
+    */
+  val fact: StructType = StructType(Seq(
+    StructField("coin_id", StringType),
+    StructField("price_usd", DoubleType),
+    StructField("market_cap", DoubleType),
+    StructField("timestamp", TimestampType)
+  ))
+
   /** Typed silver row for the `Dataset[SilverCoin]` path. */
   final case class SilverCoin(
       coin_id: String,
@@ -117,7 +135,5 @@ object CoinSchemas {
         |  avg_market_cap NUMERIC,
         |  PRIMARY KEY (dt, coin_id)
         |)""".stripMargin
-
-    val all: Seq[String] = Seq(coinDimension, coinPricesFact, goldCoinDailyMetrics)
   }
 }

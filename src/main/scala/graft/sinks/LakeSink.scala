@@ -1,6 +1,8 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Partitioned-lake writer with atomic publish + metadata sidecar
@@ -49,7 +51,7 @@ object LakeSink {
     stageAndSwap(fs, finalDir) { staging =>
       df.write.mode("overwrite").parquet(staging.toString)
       // Row count from the written files' footers — avoids recomputing the plan.
-      rowCount = spark.read.parquet(staging.toString).count()
+      rowCount = parquetRowCount(spark, staging.toString)
     }
 
     val meta = PartitionMeta(dataset, schemaVersion, dt, rowCount, sourcePath,
@@ -60,6 +62,30 @@ object LakeSink {
     // the path and a re-publish would leave readers hitting FILE_NOT_EXIST.
     spark.catalog.refreshByPath(finalDir.toString)
     rowCount
+  }
+
+  /** Rows in the parquet files under `dir`, summed from their footers on the
+    * driver: no Spark job. Lists recursively and skips what Spark's file
+    * index skips (`_`- and `.`-prefixed names other than `k=v` partition
+    * directories, and `._COPYING_` files), so the result equals
+    * `spark.read.parquet(dir).count()`.
+    */
+  def parquetRowCount(spark: SparkSession, dir: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val fs   = root.getFileSystem(conf)
+    def hidden(name: String): Boolean =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")
+    def count(st: org.apache.hadoop.fs.FileStatus): Long =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).iterator.filterNot(c => hidden(c.getPath.getName))
+          .map(count).sum
+      else {
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try reader.getRecordCount finally reader.close()
+      }
+    count(fs.getFileStatus(root))
   }
 
   /** Raw-zone CSV write (SURVEY §2.1 S2 — the v1/day-9 DAGs' `to_csv` with

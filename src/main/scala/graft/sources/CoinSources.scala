@@ -29,15 +29,19 @@ object CoinSources {
       .option("header", value = true)
       .csv(path)
 
-  /** Silver parquet. The checked-in reference fixture was written by pandas as
-    * `timestamp[ns, tz=UTC]`; Spark reads it (truncated to µs) transparently.
+  /** Silver parquet as the engine publishes it, read with the declared
+    * [[CoinSchemas.silverV1]]: no schema-inference job, and a column missing
+    * from the files reads as nulls that the V1 contract counts and fails.
+    * Not for the checked-in reference fixture: pandas wrote its `timestamp`
+    * as TIMESTAMP(NANOS), which Spark's vectorized reader rejects unless
+    * `spark.sql.legacy.parquet.nanosAsLong` is set (and then it is a long).
     */
   def readSilver(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(CoinSchemas.silverV1).parquet(path)
 
-  /** Gold parquet. */
+  /** Gold parquet as the engine publishes it, read with [[CoinSchemas.goldDaily]]. */
   def readGold(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(CoinSchemas.goldDaily).parquet(path)
 }
 
 /** Driver-side ingest source (SURVEY §2.1 S1). The reference fetches

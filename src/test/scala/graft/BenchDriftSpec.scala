@@ -41,6 +41,21 @@ class BenchDriftSpec extends AnyFunSuite with Matchers {
     many.map(_._1) shouldBe Seq("q_b", "q_a") // 5.0x before 3.0x
   }
 
+  test("the bench line renders '.' decimals under a comma-decimal default locale") {
+    val results = Seq(("q_a", 1.5, 0.123456), ("q_b", -1.0, -1.0))
+    val saved = java.util.Locale.getDefault
+    val (times, tier) =
+      try {
+        java.util.Locale.setDefault(java.util.Locale.GERMANY)
+        (Bench.timesJson(results, _._3), Bench.tierJson("parity", results))
+      } finally java.util.Locale.setDefault(saved)
+    times shouldBe """{"q_a":0.123456,"q_b":-1.000000}"""
+    tier shouldBe """"parity":{"n":1,"cold":1.500,"warm":0.123,"warm_per_query":0.1235}"""
+    // and the recording parser reads the rendered map back
+    val line = s"""{"metric":"total","queries_warm":$times,"sf":"/x/sf0.1"}"""
+    Bench.refWarmTimes(line, "/y/sf0.1") shouldBe Map("q_a" -> 0.123456, "q_b" -> -1.0)
+  }
+
   test("millisecond-floor queries are exempt until they cross the absolute floor") {
     val ref = Map("q_ms" -> 0.030, "q_big" -> 0.100)
     // 0.080 s is 2.7x a 30 ms recording but under the absolute floor:

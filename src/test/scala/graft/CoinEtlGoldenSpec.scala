@@ -1,9 +1,11 @@
 package graft
 
 import graft.ops.CoinOps
+import graft.schema.CoinSchemas
 import graft.sources.CoinSources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Golden end-to-end replay (SURVEY §5): the reference's own checked-in
   * bronze for dt=2026-01-13 must reproduce its checked-in silver and gold
@@ -134,5 +136,14 @@ class CoinEtlGoldenSpec extends SparkTestBase {
     val fact = CoinOps.factRows(silver)
     fact.columns.toSeq shouldBe Seq("coin_id", "price_usd", "market_cap", "timestamp")
     fact.count() shouldBe 100
+  }
+
+  test("declared lake schemas are the shapes the transforms produce") {
+    // the DAG reads what it wrote with these StructTypes instead of inferring
+    def shape(t: StructType) = t.fields.toSeq.map(f => f.name -> f.dataType)
+    shape(CoinOps.bronzeToSilver(bronze).schema) shouldBe shape(CoinSchemas.silverV1)
+    shape(CoinOps.goldDailyMetrics(silver, dt).schema) shouldBe shape(CoinSchemas.goldDaily)
+    shape(CoinOps.dimensionRows(silver).schema) shouldBe shape(CoinSchemas.dimension)
+    shape(CoinOps.factRows(silver).schema) shouldBe shape(CoinSchemas.fact)
   }
 }

@@ -29,6 +29,49 @@ class LakeSinkSpec extends SparkTestBase {
       .filter(_.startsWith(".staging")) shouldBe empty
   }
 
+  // ---- parquetRowCount must agree with a Spark count on every layout the
+  // file index tolerates: it replaces that count in publishPartition and
+  // in the corpus funnel report.
+
+  private def sameAsSparkCount(dir: String): Long = {
+    val n = LakeSink.parquetRowCount(spark, dir)
+    n shouldBe spark.read.parquet(dir).count()
+    n
+  }
+
+  test("parquetRowCount equals a Spark count over several part files") {
+    val dir = Files.createTempDirectory("graft-rc-parts").toString + "/t"
+    spark.range(0, 1000).repartition(5).write.parquet(dir)
+    new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet")) shouldBe 5
+    sameAsSparkCount(dir) shouldBe 1000
+  }
+
+  test("parquetRowCount equals a Spark count with a 0-row part file") {
+    val dir = Files.createTempDirectory("graft-rc-empty").toString + "/t"
+    spark.range(0, 10).write.parquet(dir)
+    spark.range(0, 0).coalesce(1).write.mode("append").parquet(dir)
+    spark.read.parquet(dir).inputFiles.length should be >= 2
+    sameAsSparkCount(dir) shouldBe 10
+  }
+
+  test("parquetRowCount skips _SUCCESS, .crc and .metadata.json siblings") {
+    val root = Files.createTempDirectory("graft-rc-side").toString
+    LakeSink.publishPartition(spark, spark.range(0, 42).toDF("k"), root, "t",
+      "2026-01-01", "v1", "src")
+    val dir = s"$root/t/dt=2026-01-01"
+    val names = new java.io.File(dir).listFiles().map(_.getName).toSet
+    names should contain allOf ("_SUCCESS", ".metadata.json")
+    names.exists(_.endsWith(".crc")) shouldBe true
+    sameAsSparkCount(dir) shouldBe 42
+  }
+
+  test("parquetRowCount recurses into k=v partition directories") {
+    val dir = Files.createTempDirectory("graft-rc-nested").toString + "/t"
+    spark.range(0, 30).selectExpr("id", "id % 3 AS k").write.partitionBy("k").parquet(dir)
+    new java.io.File(dir).listFiles().map(_.getName).toSet should contain ("k=0")
+    sameAsSparkCount(dir) shouldBe 30
+  }
+
   // ---- fault injection: the tmp→swap→sidecar protocol exists to survive
   // a crash at any point; these three cases kill the publish at each
   // boundary and prove (a) no data-loss window and (b) a re-run converges.

@@ -99,6 +99,71 @@ class OrchestrationSpec extends SparkTestBase {
       .count() shouldBe servedCount
   }
 
+  /** A fresh work tree whose raw zone holds the fixture payloads of `days`. */
+  private def stagedConf(prefix: String, days: String*): Seq[CoinDag.StageConf] = {
+    val work = Files.createTempDirectory(prefix).toString
+    days.map { d =>
+      val c = CoinDag.StageConf(d, s"$work/raw", s"$work/bronze", s"$work/lake",
+        s"$work/serve")
+      Files.createDirectories(Paths.get(c.rawRoot))
+      Files.copy(Paths.get(fixture(s"crypto-lake/bronze/coins/dt=$d/coin_raw.json")),
+        Paths.get(c.rawFile))
+      c
+    }
+  }
+
+  test("create_tables leaves the caller's job description as it found it") {
+    val Seq(conf) = stagedConf("graft-orch-ddl", dt)
+    val sc = spark.sparkContext
+    val before = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("caller's label")
+    try {
+      CoinDag.runStage(spark, "create_tables", conf)
+      sc.getLocalProperty("spark.job.description") shouldBe "caller's label"
+    } finally sc.setJobDescription(before)
+  }
+
+  test("a second-day delivery runs within its Spark job budget") {
+    // Every lake read of a dataset the DAG wrote itself carries its declared
+    // schema, and publish counts rows from footers: a read that falls back
+    // to schema inference, or a count that goes back to Spark, adds a job
+    // here. Before the declared schemas and footer counts this was 49.
+    val Seq(day1, day2) = stagedConf("graft-orch-budget", "2026-01-10", dt)
+    CoinDag.stageChain.filterNot(_ == "extract").foreach(CoinDag.runStage(spark, _, day1))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(j.stageInfos.maxByOption(_.stageId).fold("?")(_.name))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      CoinDag.stageChain.dropWhile(_ != "upload_raw_to_s3")
+        .foreach(CoinDag.runStage(spark, _, day2))
+      org.apache.spark.graftbridge.GraftCoreBridge.waitListenerBusEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    val sites = jobs.iterator().asScala.toSeq
+    withClue(sites.groupBy(identity).map { case (k, v) => s"${v.size} x $k" }
+        .toSeq.sorted.mkString("jobs by call site: ", "; ", "\n")) {
+      sites.size shouldBe 30
+    }
+  }
+
+  test("a published silver partition without market_cap still fails validate") {
+    // the declared read schema turns the missing column into nulls; the V1
+    // contract counts them, so the gate is as strict as inference was
+    val Seq(conf) = stagedConf("graft-orch-nomcap", dt)
+    Seq("create_tables", "upload_raw_to_s3", "transform_bronze_to_silver")
+      .foreach(CoinDag.runStage(spark, _, conf))
+    val silver = spark.read.parquet(conf.silverDir).drop("market_cap").localCheckpoint()
+    graft.sinks.LakeSink.publishPartition(spark, silver, conf.lakeRoot, "silver/coins",
+      conf.ds, "v1", conf.bronzeDir)
+    val e = intercept[graft.contract.SchemaContractViolation] {
+      CoinDag.runStage(spark, "validate", conf)
+    }
+    e.getMessage should include("market_cap__null: 100 rows")
+  }
+
   test("SLA stage fails a late scheduled run but passes a manual one") {
     val work = Files.createTempDirectory("graft-orch-sla").toString
     val base = CoinDag.StageConf(dt, work, work, work, work,
